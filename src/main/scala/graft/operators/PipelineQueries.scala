@@ -84,7 +84,7 @@ object PipelineQueries {
       Files.createDirectories(Paths.get(srcDir))
       // spread before the write (r15, guide §2.5): the single-row-group
       // fixture scan is ONE task, so the per-doc file writes ran
-      // serially on one core — P08Probe measured the p08 stage phase at
+      // serially on one core — a probe measured the p08 stage phase at
       // 1.7 s single-task of its ~3 s committed slot. The guard keeps
       // this a no-op on many-file production inputs.
       Tables.spread(docs.select("doc_id", "text"), col("doc_id"))
@@ -366,13 +366,13 @@ object PipelineQueries {
     // Pool-contention stress one order above p06 (VERDICT r13 item 5):
     // up to 10,000 files (doc_id < 10000 — the full corpus at sf≤0.1,
     // 10k exactly at sf1) through the same 4-connection FTP pool, PLUS
-    // an oracle-gated temp-cleanup audit p06 lacks: runOne's two-phase
-    // map (download→temp→upload, consumer.py:152-186) must delete its
-    // graft-transfer-*.tmp staging file on EVERY path, and at 10k jobs
-    // a leak would strand 10k files in the tmpdir — the audit row
-    // counts stranded NEW temp files after the drain (snapshot-diff, so
-    // leftovers from unrelated crashed JVMs can't false-fail) and the
-    // oracle pins it at zero. files/s here ÷ p06's rate is the
+    // an oracle-gated temp-cleanup audit p06 lacks: runOne stages each
+    // job in memory and only a job past the 1 MiB cap spills to a
+    // graft-transfer-*.tmp file (consumer.py:152-186), which it must
+    // delete on EVERY path; a leak would strand one file per spilled
+    // job in the tmpdir — the audit row counts stranded NEW temp files
+    // after the drain (snapshot-diff, so leftovers from unrelated crashed
+    // JVMs can't false-fail) and the oracle pins it at zero. files/s here ÷ p06's rate is the
     // linearity evidence: a pool that serializes under 10× contention
     // shows up as a super-linear slot. (Single-JVM audit: on a real
     // cluster each executor audits its own tmpdir; here local[n] shares

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory}
+import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory, TransferStage}
 
 /** The batch transfer engine: the reference's consume→parse→transfer→DLQ
   * loop (SURVEY §3.1) restated as a narrow Spark pipeline.
@@ -16,14 +16,16 @@ import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory}
   *   raw value strings
   *     → from_json PERMISSIVE (P1, message.py:55-97)
   *     → validate-split (P2, consumer.py:126-137): ok jobs / corrupt+invalid
-  *     → mapPartitions transfer map (T1, consumer.py:139-186) with
-  *       executor-side temp staging and pooled FTP connections
+  *     → mapPartitions transfer map (T1, consumer.py:139-186): each job
+  *       staged in memory (spilling to a temp file past 1 MiB) between
+  *       pooled FTP connections
   *     → TransferResult rows → success / DLQ projection (E1-E2)
   *
   * At 100 TB/1000-executor scale: jobs partition across executors exactly
   * like the reference's Kafka-partition fan-out (O3); per-executor FTP
-  * pools bound the connection count to poolSize × executors; no driver
-  * collect anywhere.
+  * pools bound the connection count to poolSize × executors, and staged
+  * bytes in memory to task slots × 1 MiB per executor; no driver collect
+  * anywhere.
   */
 object Pipeline {
 
@@ -74,8 +76,8 @@ object Pipeline {
     (jobs, dlqInput)
   }
 
-  /** The transfer map (T1): download to executor-local temp, upload to
-    * destination, always clean the temp file (consumer.py:183-186).
+  /** The transfer map (T1): stage each job's source bytes, write them to
+    * the destination, always release the stage ([[runOne]]).
     * FTP endpoints borrow from the per-executor pool; local endpoints
     * construct a throwaway backend (connect/disconnect are no-ops).
     *
@@ -109,26 +111,28 @@ object Pipeline {
       TransferBackend.withConnection(b)(f)
     }
 
-  /** consumer.py:139-186, one job. */
+  /** consumer.py:139-186, one job: read the source into a
+    * [[TransferStage]], write the destination from it, close the stage.
+    * The stage keeps up to 1 MiB in memory and spills larger files to a
+    * `graft-transfer-*.tmp` file, which closing it deletes on every path
+    * (consumer.py:183-186). Only non-fatal errors become DLQ rows; an
+    * interrupt or a fatal error fails the task, so Spark retries it. */
   def runOne(job: FileTransferJob, pc: PipelineConfig): TransferResult = {
     val t0 = System.nanoTime()
-    var tmp: Path = null
-    var bytes = 0L
     def ms = (System.nanoTime() - t0) / 1000000L
     try {
       val srcCfg = pc.serverConfig(job.source.hostname) // J1 config lookup
       val dstCfg = pc.serverConfig(job.destination.hostname)
-      tmp = Files.createTempFile("graft-transfer-", ".tmp") // consumer.py:152-154
-      withBackend(srcCfg, pc)(_.download(job.source.path, tmp.toString))
-      bytes = Files.size(tmp)
-      withBackend(dstCfg, pc)(_.upload(tmp.toString, job.destination.path))
+      val bytes = TransferStage.through(
+        out => withBackend(srcCfg, pc)(_.read(job.source.path, out)))(
+        in => withBackend(dstCfg, pc)(_.write(in, job.destination.path)))
       TransferResult(job.job_id,
         job.source.hostname, job.source.path,
         job.destination.hostname, job.destination.path,
         status = "success", error = null, error_type = null,
         bytes = bytes, duration_ms = ms)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         TransferResult(job.job_id,
           job.source.hostname, job.source.path,
           job.destination.hostname, job.destination.path,
@@ -136,8 +140,6 @@ object Pipeline {
           error = s"${e.getClass.getSimpleName}: ${e.getMessage}",
           error_type = Model.ErrorType.of(e),
           bytes = 0L, duration_ms = ms)
-    } finally {
-      if (tmp != null) Files.deleteIfExists(tmp) // consumer.py:183-186
     }
   }
 

@@ -1,7 +1,8 @@
 package graft.pipeline.transfer
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, InputStream, OutputStream}
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.{BasicFileAttributeView, PosixFileAttributes}
 
 import graft.pipeline.ServerConfig
 
@@ -10,7 +11,8 @@ import graft.pipeline.ServerConfig
   * Mirrors /root/reference/src/etl/transfer/base.py:
   *  - connect/disconnect bracketing with disconnect guaranteed on
   *    exception (base.py:21-70) — expressed here as `withConnection`;
-  *  - download = remote→local, upload = local→remote (base.py:40-60);
+  *  - download = remote→local, upload = local→remote (base.py:40-60),
+  *    both staged through the stream primitives `read`/`write`;
   *  - the factory registry keyed by server type, case-insensitive, with
   *    an error listing supported types for unknown ones (base.py:73-108).
   */
@@ -19,13 +21,24 @@ trait TransferBackend extends AutoCloseable {
   def disconnect(): Unit
   override def close(): Unit = disconnect()
 
+  /** Copy remote `remotePath` into `out`. Missing source →
+    * FileNotFoundException before any byte is written; other failures →
+    * IOException. `out` is left open. */
+  def read(remotePath: String, out: OutputStream): Unit
+
+  /** Copy all of `in` to remote `remotePath`, creating remote parent dirs
+    * and overwriting an existing file. `in` is left open. */
+  def write(in: InputStream, remotePath: String): Unit
+
   /** Copy remote `remotePath` to local `localPath`; parent dirs created.
-    * Missing source → FileNotFoundException; other failures → IOException. */
-  def download(remotePath: String, localPath: String): Unit
+    * The local file is written only once the whole source has been read. */
+  def download(remotePath: String, localPath: String): Unit =
+    TransferStage.through(read(remotePath, _))(new LocalBackend().write(_, localPath))
 
   /** Copy local `localPath` to remote `remotePath`; remote parent dirs
     * created. Missing local source → FileNotFoundException. */
-  def upload(localPath: String, remotePath: String): Unit
+  def upload(localPath: String, remotePath: String): Unit =
+    TransferStage.through(new LocalBackend().read(localPath, _))(write(_, remotePath))
 }
 
 object TransferBackend {
@@ -39,29 +52,42 @@ object TransferBackend {
 
 /** Local-filesystem backend — /root/reference/src/etl/transfer/local.py.
   *
-  * Both download and upload are "copy src→dst" (local.py:50-94; direction
-  * is nominal). Copies preserve file attributes (`shutil.copy2` parity,
-  * local.py:70,93) and create destination parent directories.
+  * Reads and writes are plain file copies (local.py:50-94; direction is
+  * nominal), and BOTH directions say "Source file not found" for a missing
+  * source (local.py:64,87 — only the FTP backend's upload says "Local file
+  * not found", ftp.py:168). Writes create destination parent directories.
+  * A write from a [[TransferStage]] a local read filled gives the
+  * destination the source's permissions and times (`shutil.copy2` parity,
+  * local.py:70,93).
   */
 final class LocalBackend extends TransferBackend {
   override def connect(): Unit = () // local.py:42-44 — no-op
   override def disconnect(): Unit = () // local.py:46-48 — no-op
 
-  private def copy(src: String, dst: String, missingMsg: String): Unit = {
-    val s = Paths.get(src)
-    if (!Files.exists(s)) throw new FileNotFoundException(s"$missingMsg: $src")
-    val d = Paths.get(dst)
-    Option(d.getParent).foreach(Files.createDirectories(_))
-    Files.copy(s, d, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.COPY_ATTRIBUTES)
+  override def read(remotePath: String, out: OutputStream): Unit = {
+    val s = Paths.get(remotePath)
+    if (!Files.exists(s)) throw new FileNotFoundException(s"Source file not found: $remotePath")
+    out match {
+      case stage: TransferStage =>
+        stage.attributes = Files.readAttributes(s, classOf[PosixFileAttributes])
+      case _ =>
+    }
+    Files.copy(s, out)
   }
 
-  // local.py:50-71 / :73-94 — identical copy in both directions; BOTH
-  // directions use "Source file not found" (local.py:64,87 — only the
-  // FTP backend's upload says "Local file not found", ftp.py:168).
-  override def download(remotePath: String, localPath: String): Unit =
-    copy(remotePath, localPath, "Source file not found")
-  override def upload(localPath: String, remotePath: String): Unit =
-    copy(localPath, remotePath, "Source file not found")
+  override def write(in: InputStream, remotePath: String): Unit = {
+    val d = Paths.get(remotePath)
+    Option(d.getParent).foreach(Files.createDirectories(_))
+    Files.copy(in, d, StandardCopyOption.REPLACE_EXISTING)
+    in match {
+      case staged: TransferStage.Input if staged.attributes != null =>
+        val a = staged.attributes
+        Files.setPosixFilePermissions(d, a.permissions)
+        Files.getFileAttributeView(d, classOf[BasicFileAttributeView])
+          .setTimes(a.lastModifiedTime, a.lastAccessTime, null)
+      case _ =>
+    }
+  }
 }
 
 /** base.py:73-108 — type→backend registry. Case-insensitive keys; unknown
@@ -74,6 +100,8 @@ object TransferFactory {
 
   def register(serverType: String, make: ServerConfig => TransferBackend): Unit =
     registry.put(serverType.toLowerCase, make)
+
+  def unregister(serverType: String): Unit = registry.remove(serverType.toLowerCase)
 
   def supportedTypes: Seq[String] = {
     import scala.jdk.CollectionConverters._

@@ -1,9 +1,11 @@
 package graft.pipeline.transfer
 
-import java.io.{BufferedReader, FileNotFoundException, IOException, InputStream, InputStreamReader, OutputStream}
+import java.io.{BufferedReader, ByteArrayInputStream, FileNotFoundException, IOException, InputStream, InputStreamReader, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Path, Paths}
+
+import scala.util.Using
 
 import graft.pipeline.ServerConfig
 
@@ -129,57 +131,36 @@ final class FtpClient(host: String, port: Int, timeoutMs: Int = 30000) {
     }
   }
 
-  /** Binary RETR to a local file — ftp.py:115-150. */
+  /** Binary RETR — ftp.py:115-150: hands the data stream to `consume`.
+    * A 550 throws FileNotFoundException before `consume` runs. */
+  def retr[A](remotePath: String)(consume: InputStream => A): A =
+    dataConnection(s"RETR $remotePath") { (pre, data) =>
+      if (pre.code == 550)
+        throw new FileNotFoundException(s"Remote file not found: $remotePath")
+      if (pre.code >= 400) throw new IOException(s"RETR failed: ${pre.text}")
+      val result = consume(data.getInputStream)
+      val fin = readReply()
+      if (!fin.ok) throw new IOException(s"RETR transfer failed: ${fin.text}")
+      result
+    }
+
+  /** Binary STOR of all of `in` — ftp.py:152-184. */
+  def stor(in: InputStream, remotePath: String): Unit =
+    dataConnection(s"STOR $remotePath") { (pre, data) =>
+      if (pre.code >= 400) throw new IOException(s"STOR failed: ${pre.text}")
+      in.transferTo(data.getOutputStream)
+      data.shutdownOutput()
+      val fin = readReply()
+      if (!fin.ok) throw new IOException(s"STOR transfer failed: ${fin.text}")
+    }
+
+  /** RETR into a local file (created or truncated). */
   def retr(remotePath: String, localPath: Path): Unit =
-    dataConnection(s"RETR $remotePath") { (pre, data) =>
-      if (pre.code == 550)
-        throw new FileNotFoundException(s"Remote file not found: $remotePath")
-      if (pre.code >= 400) throw new IOException(s"RETR failed: ${pre.text}")
-      Option(localPath.getParent).foreach(Files.createDirectories(_))
-      val os = Files.newOutputStream(localPath)
-      try pipe(data.getInputStream, os)
-      finally os.close()
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"RETR transfer failed: ${fin.text}")
-    }
+    retr(remotePath)(in => Using.resource(Files.newOutputStream(localPath))(in.transferTo))
 
-  /** Binary RETR straight to memory — for consumers that want the bytes
-    * (the DataSource V2 reader), skipping the temp-file write+read the
-    * transfer pipeline's staging path needs. */
-  def retrBytes(remotePath: String): Array[Byte] =
-    dataConnection(s"RETR $remotePath") { (pre, data) =>
-      if (pre.code == 550)
-        throw new FileNotFoundException(s"Remote file not found: $remotePath")
-      if (pre.code >= 400) throw new IOException(s"RETR failed: ${pre.text}")
-      val os = new java.io.ByteArrayOutputStream()
-      pipe(data.getInputStream, os)
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"RETR transfer failed: ${fin.text}")
-      os.toByteArray
-    }
-
-  /** Binary STOR straight from memory — the write twin of retrBytes. */
-  def storBytes(bytes: Array[Byte], remotePath: String): Unit =
-    dataConnection(s"STOR $remotePath") { (pre, data) =>
-      if (pre.code >= 400) throw new IOException(s"STOR failed: ${pre.text}")
-      data.getOutputStream.write(bytes)
-      data.getOutputStream.flush()
-      data.shutdownOutput()
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"STOR transfer failed: ${fin.text}")
-    }
-
-  /** Binary STOR from a local file — ftp.py:152-184. */
+  /** STOR from a local file. */
   def stor(localPath: Path, remotePath: String): Unit =
-    dataConnection(s"STOR $remotePath") { (pre, data) =>
-      if (pre.code >= 400) throw new IOException(s"STOR failed: ${pre.text}")
-      val is = Files.newInputStream(localPath)
-      try pipe(is, data.getOutputStream)
-      finally is.close()
-      data.shutdownOutput()
-      val fin = readReply()
-      if (!fin.ok) throw new IOException(s"STOR transfer failed: ${fin.text}")
-    }
+    Using.resource(Files.newInputStream(localPath))(stor(_, remotePath))
 
   /** RNFR/RNTO rename — the commit step of temp-name uploads. A 5xx
     * RNTO reply (permanent refusal — possibly, but not necessarily,
@@ -277,13 +258,6 @@ final class FtpClient(host: String, port: Int, timeoutMs: Int = 30000) {
     }
   }
 
-  private def pipe(is: InputStream, os: OutputStream): Unit = {
-    val buf = new Array[Byte](64 * 1024)
-    var n = is.read(buf)
-    while (n >= 0) { if (n > 0) os.write(buf, 0, n); n = is.read(buf) }
-    os.flush()
-  }
-
   def quit(): Unit = {
     try if (isConnected) cmd("QUIT")
     catch { case _: IOException => () }
@@ -346,18 +320,21 @@ final class FtpBackend(cfg: ServerConfig, passiveMode: Boolean = true) extends T
     if (r.code == 213) r.text.drop(4).trim.toLong else -1L
   }
 
-  override def download(remotePath: String, localPath: String): Unit =
-    client.retr(remotePath, Paths.get(localPath))
+  override def read(remotePath: String, out: OutputStream): Unit =
+    client.retr(remotePath)(_.transferTo(out))
+
+  override def write(in: InputStream, remotePath: String): Unit = {
+    ensureRemoteDir(parentOf(remotePath))
+    client.stor(in, remotePath)
+  }
 
   /** Download a remote file's bytes without touching local disk. */
   def downloadBytes(remotePath: String): Array[Byte] =
-    client.retrBytes(remotePath)
+    client.retr(remotePath)(_.readAllBytes())
 
   /** Upload bytes directly (no local staging), creating parent dirs. */
-  def uploadBytes(bytes: Array[Byte], remotePath: String): Unit = {
-    ensureRemoteDir(parentOf(remotePath))
-    client.storBytes(bytes, remotePath)
-  }
+  def uploadBytes(bytes: Array[Byte], remotePath: String): Unit =
+    write(new ByteArrayInputStream(bytes), remotePath)
 
   /** Rename a remote file (RNFR/RNTO). */
   def rename(from: String, to: String): Unit = client.rename(from, to)
@@ -365,12 +342,12 @@ final class FtpBackend(cfg: ServerConfig, passiveMode: Boolean = true) extends T
   /** Delete a remote file (DELE). */
   def delete(remotePath: String): Unit = client.delete(remotePath)
 
+  // ftp.py:167-168: a missing local file fails with its own message,
+  // before any remote I/O
   override def upload(localPath: String, remotePath: String): Unit = {
-    val lp = Paths.get(localPath)
-    if (!Files.exists(lp))
+    if (!Files.exists(Paths.get(localPath)))
       throw new FileNotFoundException(s"Local file not found: $localPath")
-    ensureRemoteDir(parentOf(remotePath))
-    client.stor(lp, remotePath)
+    super.upload(localPath, remotePath)
   }
 
   private def parentOf(p: String): String = {

@@ -1,13 +1,15 @@
 package graft.pipeline
 
+import java.io.{InputStream, OutputStream}
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.{FileTime, PosixFilePermissions}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.pipeline.transfer.FtpPools
+import graft.pipeline.transfer.{FtpPools, TransferBackend, TransferFactory, TransferStage}
 import graft.pipeline.testkit.FakeFtpServer
 
 /** E2E tier (top of the SURVEY §5 pyramid): full pipeline runs with
@@ -47,6 +49,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     "FAKEFTP_USERNAME" -> "u", "FAKEFTP_PASSWORD" -> "p",
     "FTP_POOL_SIZE" -> "2"))
 
+  /** Transfer staging files in the JVM's tmpdir, by name. */
+  private def staging(): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = Files.list(Path.of(System.getProperty("java.io.tmpdir")))
+    try st.iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("graft-transfer-")).toSet
+    finally st.close()
+  }
+
+  /** Seeded bytes past the stage's 1 MiB memory cap, so the job spills. */
+  private def spillSized(seed: Long): Array[Byte] = {
+    val b = new Array[Byte](TransferStage.MemoryCap + 12345)
+    new scala.util.Random(seed).nextBytes(b)
+    b
+  }
+
   private def jobJson(id: String, sh: String, sp: String, dh: String, dp: String): String =
     s"""{"job_id":"$id","source":{"hostname":"$sh","path":"$sp"},""" +
       s""""destination":{"hostname":"$dh","path":"$dp"}}"""
@@ -68,6 +86,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.head.bytes == Files.size(src))
     assert(dlq.count() == 0)
     assert(Files.readAllBytes(dst).sameElements(Files.readAllBytes(src)))
+  }
+
+  test("local→local keeps the source's last-modified time and POSIX permissions (copy2 parity)") {
+    // local.py:70,93 copy with shutil.copy2, which carries mode and times
+    val src = writeSrc("in/attrs.txt", "attributes ride along")
+    Files.setPosixFilePermissions(src, PosixFilePermissions.fromString("rwxr-x---"))
+    val mtime = FileTime.fromMillis(1234567890000L)
+    Files.setLastModifiedTime(src, mtime)
+    val dst = work.resolve("out/attrs.txt")
+    val raw = Seq(jobJson("j-attrs", "src", src.toString, "dst", dst.toString)).toDF("value")
+    assert(Pipeline.run(raw, pc)._1.collect().head.status == "success")
+    assert(Files.getLastModifiedTime(dst) == mtime)
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(dst)) == "rwxr-x---")
   }
 
   test("local→FTP→local chain is byte-exact (test_e2e.py:248-351)") {
@@ -150,21 +181,67 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("temp staging files are always cleaned up (test_consumer.py:394-458)") {
-    val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
-    def staging(): Set[String] = {
-      import scala.jdk.CollectionConverters._
-      Files.list(tmpDir).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("graft-transfer-")).toSet
-    }
     val before = staging()
     val src = writeSrc("in/c.txt", "cleanup")
+    val big = work.resolve("in/c-big.bin")
+    Files.write(big, spillSized(1))
     val raw = Seq(
       jobJson("c-ok", "src", src.toString, "dst", work.resolve("out/c.txt").toString),
+      jobJson("c-spill", "src", big.toString, "dst", work.resolve("out/c-big.bin").toString),
       jobJson("c-fail", "src", work.resolve("nope.txt").toString,
-        "dst", work.resolve("out/nope.txt").toString)).toDF("value")
+        "dst", work.resolve("out/nope.txt").toString),
+      jobJson("c-ftp-fail", "fakeftp", "/absent/nope.bin",
+        "dst", work.resolve("out/nope-ftp.bin").toString)).toDF("value")
     val (results, _) = Pipeline.run(raw, pc)
-    assert(results.count() == 2) // force execution
+    val byStatus = results.groupBy("status").count().as[(String, Long)].collect().toMap
+    assert(byStatus == Map("success" -> 2L, "dlq" -> 2L))
+    assert(Files.readAllBytes(work.resolve("out/c-big.bin")).sameElements(Files.readAllBytes(big)))
     assert(staging() == before, "no staging temp files may survive, success or failure")
+  }
+
+  test("a file past the 1 MiB stage cap moves byte-exact FTP→FTP and local→FTP") {
+    val payload = spillSized(2)
+    Files.createDirectories(ftpRoot.resolve("big"))
+    Files.write(ftpRoot.resolve("big/src.bin"), payload)
+    val local = work.resolve("in/big-up.bin")
+    Files.write(local, payload)
+    val before = staging()
+    val raw = Seq(
+      jobJson("b-ftp", "fakeftp", "/big/src.bin", "fakeftp", "/big/out/ftp.bin"),
+      jobJson("b-local", "src", local.toString, "fakeftp", "/big/out/local.bin")).toDF("value")
+    val r = Pipeline.run(raw, pc)._1.collect()
+    assert(r.length == 2 && r.forall(_.status == "success"), r.mkString("; "))
+    assert(r.forall(_.bytes == payload.length.toLong))
+    for (f <- Seq("ftp.bin", "local.bin"))
+      assert(Files.readAllBytes(ftpRoot.resolve(s"big/out/$f")).sameElements(payload), f)
+    assert(staging() == before)
+  }
+
+  test("an interrupt fails the task instead of becoming a DLQ row; the spill is still deleted") {
+    TransferFactory.register("interrupting", _ => new TransferBackend {
+      def connect(): Unit = ()
+      def disconnect(): Unit = ()
+      def read(remotePath: String, out: OutputStream): Unit = {
+        out.write(spillSized(3)) // past the cap: the stage has spilled to disk
+        throw new InterruptedException("killed mid-read")
+      }
+      def write(in: InputStream, remotePath: String): Unit = ()
+    })
+    try {
+      val ipc = new PipelineConfig(Map(
+        "HALT_TYPE" -> "interrupting", "HALT_HOST" -> "localhost",
+        "DST_TYPE" -> "local", "DST_HOST" -> "localhost"))
+      val before = staging()
+      val job = FileTransferJob("j-halt",
+        Endpoint("halt", "/any"), Endpoint("dst", work.resolve("out/halt.bin").toString))
+      intercept[InterruptedException](Pipeline.runOne(job, ipc))
+      assert(staging() == before, "the spill file must be deleted on an interrupt too")
+      val raw = Seq(jobJson("j-halt", "halt", "/any", "dst", work.resolve("out/halt.bin").toString))
+        .toDF("value")
+      val e = intercept[org.apache.spark.SparkException](Pipeline.run(raw, ipc)._1.collect())
+      assert(e.getMessage.contains("InterruptedException: killed mid-read"), e.getMessage)
+      assert(staging() == before)
+    } finally TransferFactory.unregister("interrupting")
   }
 
   test("p08 order-up FTP bulk: full corpus succeeds, temp audit pinned at 0") {
@@ -221,6 +298,28 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(dlq2.count() == 0)
       assert(new String(Files.readAllBytes(killRoot.resolve("store/out.txt")), "UTF-8") == content)
       frozen.unpersist()
+    } finally { FtpPools.closeAll(); killer.stop() }
+  }
+
+  test("a spilled job whose upload dies leaves no staging file") {
+    val killRoot = Files.createTempDirectory("graft-e2e-spillkill")
+    Files.createDirectories(killRoot.resolve("store"))
+    val killer = new FakeFtpServer(killRoot, storKillAfterBytes = 2L, storKillCount = 1)
+    try {
+      val kpc = new PipelineConfig(Map(
+        "SRC_TYPE" -> "local", "SRC_HOST" -> "localhost",
+        "KILLFTP_TYPE" -> "ftp", "KILLFTP_HOST" -> "127.0.0.1",
+        "KILLFTP_PORT" -> killer.port.toString,
+        "KILLFTP_USERNAME" -> "u", "KILLFTP_PASSWORD" -> "p"))
+      val big = work.resolve("kill/big.bin")
+      Files.createDirectories(big.getParent)
+      Files.write(big, spillSized(4))
+      val before = staging()
+      val raw = Seq(jobJson("j-spillkill", "src", big.toString, "killftp", "/store/big.bin"))
+        .toDF("value")
+      val r = Pipeline.run(raw, kpc)._1.collect().head
+      assert(r.status == "dlq" && r.error_type == "io", s"the killed upload must fail the job, got $r")
+      assert(staging() == before)
     } finally { FtpPools.closeAll(); killer.stop() }
   }
 

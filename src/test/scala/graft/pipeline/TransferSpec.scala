@@ -58,6 +58,26 @@ class TransferSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new String(Files.readAllBytes(dst), "UTF-8") == "new content")
   }
 
+  test("a stage holds bytes in memory up to 1 MiB, spills past it, and close deletes the spill") {
+    val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
+    def spills(): Set[Path] = {
+      import scala.jdk.CollectionConverters._
+      val st = Files.newDirectoryStream(tmpDir, "graft-transfer-*.tmp")
+      try st.iterator().asScala.toSet finally st.close()
+    }
+    val before = spills()
+    val bytes = Array.tabulate[Byte](TransferStage.MemoryCap + 1)(_.toByte)
+    val stage = new TransferStage
+    stage.write(bytes, 0, TransferStage.MemoryCap)
+    assert(spills() == before, "a stage at the cap must not touch disk")
+    stage.write(bytes, TransferStage.MemoryCap, 1)
+    assert((spills() -- before).size == 1, "the byte past the cap must spill")
+    assert(stage.size == bytes.length.toLong)
+    assert(stage.input().readAllBytes().sameElements(bytes))
+    stage.close()
+    assert(spills() == before)
+  }
+
   test("factory dispatch is case-insensitive (base.py:89-99)") {
     val cfg = ServerConfig("h", "LOCAL", "localhost", 0, "", "")
     assert(TransferFactory.create(cfg).isInstanceOf[LocalBackend])
